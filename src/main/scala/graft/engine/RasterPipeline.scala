@@ -1,7 +1,9 @@
 package graft.engine
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.core._
 import graft.core.MarchingSquares.{GridView, Scratch}
 import graft.sinks.{OsmXmlWriter, OsmXml, PreparedWay}
@@ -13,12 +15,18 @@ import graft.sinks.{OsmXmlWriter, OsmXml, PreparedWay}
   *   binaryFile scan -> decode+chop (flatMap, executor-side recursion)
   *     -> Dataset[DemTileRow] (the tile IS the shuffle unit; upper chops
   *        keep one overlap row, the reference's stitching contract)
-  *   -> repartitionByRange(key, tileIdx) -> trace kernel (mapPartitions)
-  *     -> Dataset[ContourRow]
-  *   -> per-tile counts -> driver prefix-sum -> deterministic node/way ids
-  *     (reference reserves ranges via shared counters, processor.py:98-140;
-  *     we pin the stronger sorted-tile order, SURVEY.md §4.3)
-  *   -> per-tile OSM XML files (nodes first, ways buffered to done()).
+  *   -> repartitionByRange(salt, key, tileIdx) -> trace kernel
+  *     (mapPartitions) -> ContourRows, cached once as objects
+  *     (RDD, MEMORY_AND_DISK; no columnar re-encode): each tile's rows are
+  *     contiguous in one partition, in (elevation, pathIdx) order
+  *   -> per-partition counts (a fold + collect, no shuffle) -> driver
+  *     prefix-sum -> deterministic node/way ids (reference reserves ranges
+  *     via shared counters, processor.py:98-140; we pin the stronger
+  *     sorted-tile order, SURVEY.md §4.3)
+  *   -> per-tile files written by the trace partitions themselves, no
+  *     writer shuffle (nodes first, ways buffered to done()). A tile whose
+  *     rows are not where they were counted is refused loudly, never
+  *     written twice or with shifted ids.
   *
   * At cluster scale: files and tiles are independent units; the only driver
   * synchronization is the tiny per-tile count collect for the prefix sum.
@@ -57,7 +65,15 @@ object RasterPipeline {
       nbNodes: Int,
       coords: Array[Double])
 
-  final case class TileOffsets(nodeStart: Long, wayStart: Long)
+  /** A tile's id ranges, with the counts and the trace partition they were
+    * computed from: the writer refuses a tile found elsewhere or with other
+    * counts (partition -1: a committed tile, never written again). */
+  final case class TileOffsets(nodeStart: Long, wayStart: Long, nodes: Long, ways: Long, partition: Int)
+
+  /** Nodes and ways of one tile, as counted in its trace partition. */
+  private final case class TileCount(key: String, tileIdx: Int, nodes: Long, ways: Long, partition: Int)
+
+  private def tileName(key: String, tileIdx: Int): String = s"$key#$tileIdx"
 
   /** Decode a DEM source (HGT or GeoTIFF) to (grid, native bbox, epsg).
     * GeoTIFF per reference init_as_geotiff (file.py:500-555); HGT per
@@ -248,12 +264,17 @@ object RasterPipeline {
   /** Trace contours per tile; explicit range-partitioned shuffle on the
     * tile key so each tile is processed exactly once, co-located. */
   def contours(tilesDs: Dataset[DemTileRow], cfg: JobConfig, partitions: Int = 0): Dataset[ContourRow] = {
-    val spark = tilesDs.sparkSession
-    import spark.implicits._
-    val parts = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
-    val voidMax = cfg.voidMax
-    val smoothRatio = cfg.smoothRatio
-    val feetSteps = cfg.feetSteps
+    import tilesDs.sparkSession.implicits._
+    traceLayout(tilesDs, partitions).mapPartitions(traceKernel(cfg))
+  }
+
+  /** The same trace as `contours`, as objects: nothing is encoded between
+    * the kernel and the writer. */
+  private def tracedRows(tilesDs: Dataset[DemTileRow], cfg: JobConfig): RDD[ContourRow] =
+    traceLayout(tilesDs, 0).rdd.mapPartitions(traceKernel(cfg), preservesPartitioning = true)
+
+  private def traceLayout(tilesDs: Dataset[DemTileRow], partitions: Int): Dataset[DemTileRow] = {
+    val parts = if (partitions > 0) partitions else tilesDs.sparkSession.sessionState.conf.numShufflePartitions
     // explicit range-partitioned shuffle with a deterministic hash salt as
     // the leading key: per-tile trace cost is spatially correlated (all-sea
     // vs all-mountain neighbours), so pure (key, tileIdx) ranges produce
@@ -263,103 +284,140 @@ object RasterPipeline {
       .repartitionByRange(parts, pmod(xxhash64(col("key"), col("tileIdx")), lit(1 << 20)),
         col("key"), col("tileIdx"))
       .sortWithinPartitions("path", "tileIdx") // group same-file tiles -> one decode
-      .mapPartitions { it =>
-        val scratch = new Scratch
-        it.flatMap { tr =>
-          val g = GridCache.grid(tr.path, voidMax, smoothRatio, feetSteps)
-          val base = tr.rowOff * tr.fullCols + tr.colOff
-          // checkPoly: OR the polygon-outside mask into (a copy of) the
-          // void mask for this tile's window — outside-polygon cells trace
-          // like voids, the reference's border-tile semantics
-          val clip = if (tr.checkPoly) effectiveClip(cfg, tr.epsg, tr.spec) else None
-          val mask: Array[Boolean] =
-            if (clip.isDefined) {
-              sliceMask(BBox(tr.minLon, tr.minLat, tr.maxLon, tr.maxLat),
-                tr.rows, tr.cols, tr.lonInc, tr.latInc, tr.epsg, tr.spec, clip.get) match {
-                case Geometry.Mixed(pm) =>
-                  val m = if (g.mask != null) g.mask.clone() else new Array[Boolean](g.values.length)
-                  var r = 0
-                  while (r < tr.rows) {
-                    var c = 0
-                    while (c < tr.cols) {
-                      if (pm(r * tr.cols + c)) m(base + r * tr.fullCols + c) = true
-                      c += 1
-                    }
-                    r += 1
+  }
+
+  /** Trace one partition of tile specs; a tile's rows come out together,
+    * in (elevation, pathIdx) order. */
+  private def traceKernel(cfg: JobConfig): Iterator[DemTileRow] => Iterator[ContourRow] = {
+    val voidMax = cfg.voidMax
+    val smoothRatio = cfg.smoothRatio
+    val feetSteps = cfg.feetSteps
+    it => {
+      val scratch = new Scratch
+      it.flatMap { tr =>
+        val g = GridCache.grid(tr.path, voidMax, smoothRatio, feetSteps)
+        val base = tr.rowOff * tr.fullCols + tr.colOff
+        // checkPoly: OR the polygon-outside mask into (a copy of) the
+        // void mask for this tile's window — outside-polygon cells trace
+        // like voids, the reference's border-tile semantics
+        val clip = if (tr.checkPoly) effectiveClip(cfg, tr.epsg, tr.spec) else None
+        val mask: Array[Boolean] =
+          if (clip.isDefined) {
+            sliceMask(BBox(tr.minLon, tr.minLat, tr.maxLon, tr.maxLat),
+              tr.rows, tr.cols, tr.lonInc, tr.latInc, tr.epsg, tr.spec, clip.get) match {
+              case Geometry.Mixed(pm) =>
+                val m = if (g.mask != null) g.mask.clone() else new Array[Boolean](g.values.length)
+                var r = 0
+                while (r < tr.rows) {
+                  var c = 0
+                  while (c < tr.cols) {
+                    if (pm(r * tr.cols + c)) m(base + r * tr.fullCols + c) = true
+                    c += 1
                   }
-                  m
-                case Geometry.AllOutside => // possible under re-chop drift; mask all
-                  val m = new Array[Boolean](g.values.length)
-                  java.util.Arrays.fill(m, true)
-                  m
-                case Geometry.AllInside => g.mask
-              }
-            } else g.mask
-          val gv = new GridView(g.values, mask, base, tr.fullCols, tr.rows, tr.cols)
-          val bbox = BBox(tr.minLon, tr.minLat, tr.maxLon, tr.maxLat)
-          // F10: non-4326 sources trace in native grid space; paths are
-          // reprojected to WGS84 before RDP/split (reference order), and
-          // the emitted row bbox is the reprojected tile bbox
-          val xf = Crs.toWgs84(tr.epsg, tr.spec)
-          val tc = ContourGen.tileContours(gv, bbox, tr.lonInc, tr.latInc, cfg, scratch, xf)
-          // envelope, not the strict aligned-rectangle transform: UTM tiles
-          // tilt under reprojection and the row bbox is naming metadata
-          val obox = xf.map(Crs.envelopeBBox(bbox, _)).getOrElse(bbox)
-          val (oMinLon, oMinLat, oMaxLon, oMaxLat) =
-            (obox.minLon, obox.minLat, obox.maxLon, obox.maxLat)
-          tc.contours.iterator.flatMap { lc =>
-            lc.paths.iterator.zipWithIndex.map { case (p, i) =>
-              val n = p.length / 2
-              val closed = n >= 2 && p(0) == p(2 * (n - 1)) && p(1) == p(2 * (n - 1) + 1)
-              ContourRow(tr.key, tr.tileIdx, oMinLon, oMinLat, oMaxLon, oMaxLat,
-                lc.elevation, i, closed, if (closed) n - 1 else n, p)
+                  r += 1
+                }
+                m
+              case Geometry.AllOutside => // possible under re-chop drift; mask all
+                val m = new Array[Boolean](g.values.length)
+                java.util.Arrays.fill(m, true)
+                m
+              case Geometry.AllInside => g.mask
             }
+          } else g.mask
+        val gv = new GridView(g.values, mask, base, tr.fullCols, tr.rows, tr.cols)
+        val bbox = BBox(tr.minLon, tr.minLat, tr.maxLon, tr.maxLat)
+        // F10: non-4326 sources trace in native grid space; paths are
+        // reprojected to WGS84 before RDP/split (reference order), and
+        // the emitted row bbox is the reprojected tile bbox
+        val xf = Crs.toWgs84(tr.epsg, tr.spec)
+        val tc = ContourGen.tileContours(gv, bbox, tr.lonInc, tr.latInc, cfg, scratch, xf)
+        // envelope, not the strict aligned-rectangle transform: UTM tiles
+        // tilt under reprojection and the row bbox is naming metadata
+        val obox = xf.map(Crs.envelopeBBox(bbox, _)).getOrElse(bbox)
+        val (oMinLon, oMinLat, oMaxLon, oMaxLat) =
+          (obox.minLon, obox.minLat, obox.maxLon, obox.maxLat)
+        tc.contours.iterator.flatMap { lc =>
+          lc.paths.iterator.zipWithIndex.map { case (p, i) =>
+            val n = p.length / 2
+            val closed = n >= 2 && p(0) == p(2 * (n - 1)) && p(1) == p(2 * (n - 1) + 1)
+            ContourRow(tr.key, tr.tileIdx, oMinLon, oMinLat, oMaxLon, oMaxLat,
+              lc.elevation, i, closed, if (closed) n - 1 else n, p)
           }
         }
       }
+    }
   }
 
   /** Per-tile (nodes, ways) counts collected to the driver — tiny: one
-    * row per tile, never raster data. This is the engine's one remaining
-    * O(tiles) driver surface, kept deliberately: the deterministic
-    * prefix sum it feeds (see prefixSum) is the id contract that makes
-    * resume byte-identical, and the map it produces is broadcast to the
-    * writers. Envelope: ~48 B/tile, so 10^7 tiles (a full-planet 100 TB
-    * DEM corpus at 1-degree tiling) is ~0.5 GB driver heap — within a
-    * normal driver. A distributed alternative (window prefix sum over
-    * (key, tileIdx) + join-back) exists if that envelope is ever
-    * exceeded; the union-bbox and lineage paths already run distributed. */
-  private def tileCounts(contoursDs: Dataset[ContourRow]): Seq[((String, Int), (Long, Long))] =
-    contoursDs
-      .groupBy("key", "tileIdx")
-      .agg(sum("nbNodes").as("nodes"), count(lit(1)).as("ways"))
-      .collect()
-      .map(r => ((r.getString(0), r.getInt(1)), (r.getLong(2), r.getLong(3))))
-      .toSeq
+    * row per tile, never raster data, and no shuffle: each partition folds
+    * its own run of rows. This is the engine's one remaining O(tiles)
+    * driver surface, kept deliberately: the deterministic prefix sum it
+    * feeds (see prefixSum) is the id contract that makes resume
+    * byte-identical, and the map it produces is broadcast to the writers.
+    * Envelope: ~64 B/tile, so 10^7 tiles (a full-planet 100 TB DEM corpus
+    * at 1-degree tiling) is ~0.6 GB driver heap — within a normal driver.
+    * A tile whose rows are not contiguous in one partition is an error,
+    * not a sum: its file would be written by two tasks. */
+  private def tileCounts(rows: RDD[(String, Int, Int)]): Seq[TileCount] = {
+    val counts = rows.mapPartitionsWithIndex { (part, it) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[TileCount]
+      val seen = scala.collection.mutable.HashSet.empty[(String, Int)]
+      var tile: (String, Int) = null
+      var nodes = 0L
+      var ways = 0L
+      def emit(): Unit = if (tile != null) out += TileCount(tile._1, tile._2, nodes, ways, part)
+      it.foreach { case (key, tileIdx, nbNodes) =>
+        if (tile == null || key != tile._1 || tileIdx != tile._2) {
+          emit()
+          tile = (key, tileIdx)
+          if (!seen.add(tile)) throw new IllegalStateException(
+            s"tile ${tileName(key, tileIdx)}: its rows are not contiguous in partition $part")
+          nodes = 0L
+          ways = 0L
+        }
+        nodes += nbNodes
+        ways += 1
+      }
+      emit()
+      out.iterator
+    }.collect().toSeq
+    counts.groupBy(c => (c.key, c.tileIdx)).foreach { case ((key, tileIdx), cs) =>
+      if (cs.size > 1) throw new IllegalStateException(
+        s"tile ${tileName(key, tileIdx)}: rows in partitions ${cs.map(_.partition).sorted.mkString(", ")}")
+    }
+    counts
+  }
 
   /** Deterministic prefix sum over per-tile counts in (key, tileIdx)
     * order — THE id contract byte-identical resume depends on; both the
     * fresh-run and resume paths must walk it identically, so they share
     * this one implementation. */
-  private def prefixSum(
-      counts: Seq[((String, Int), (Long, Long))], cfg: JobConfig): Map[(String, Int), TileOffsets] = {
+  private def prefixSum(counts: Seq[TileCount], cfg: JobConfig): Map[(String, Int), TileOffsets] = {
     var nodeId = cfg.startNodeId
     var wayId = cfg.startWayId
-    counts.sortBy(_._1).map { case (k, (nodes, ways)) =>
-      val off = TileOffsets(nodeId, wayId)
-      nodeId += nodes
-      wayId += ways
-      k -> off
+    counts.sortBy(c => (c.key, c.tileIdx)).map { c =>
+      val off = TileOffsets(nodeId, wayId, c.nodes, c.ways, c.partition)
+      nodeId += c.nodes
+      wayId += c.ways
+      (c.key, c.tileIdx) -> off
     }.toMap
   }
 
   /** Deterministic global id offsets: per-tile counts -> driver prefix sum
     * in (key, tileIdx) order. The reference only guarantees non-overlap
-    * (tests/hgt/test_processor.py:105-130); this is strictly stronger. */
+    * (tests/hgt/test_processor.py:105-130); this is strictly stronger.
+    * Only the three counted columns are read. */
   def idOffsets(contoursDs: Dataset[ContourRow], cfg: JobConfig): Map[(String, Int), TileOffsets] =
-    prefixSum(tileCounts(contoursDs), cfg)
+    prefixSum(tileCounts(contoursDs.select("key", "tileIdx", "nbNodes").rdd
+      .map(r => (r.getString(0), r.getInt(1), r.getInt(2)))), cfg)
 
-  /** Write one OSM XML file per tile under outDir. Returns files written. */
+  private def idOffsets(rows: RDD[ContourRow], cfg: JobConfig): Map[(String, Int), TileOffsets] =
+    prefixSum(tileCounts(rows.map(r => (r.key, r.tileIdx, r.nbNodes))), cfg)
+
+  /** Write one OSM XML (or `format`) file per tile under outDir, from the
+    * partitions the ids were counted in; single-output mode instead
+    * serializes every tile, in id order, into one file. Returns files
+    * written. */
   def writeOsmXml(
       contoursDs: Dataset[ContourRow],
       offsets: Map[(String, Int), TileOffsets],
@@ -369,100 +427,130 @@ object RasterPipeline {
       commit: Boolean = false,
       format: String = graft.sinks.TileSink.OsmXmlFormat,
       singleBBox: Option[BBox] = None): Seq[String] = {
-    val spark = contoursDs.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(offsets)
+    // single-output mode (reference processor.py:273-336): one file over
+    // the global bbox, ALL nodes before ALL ways, tiles serialized through
+    // one partition (parallelization disabled, as in the reference)
+    val rows =
+      if (singleFileName.isDefined)
+        contoursDs.coalesce(1).sortWithinPartitions("key", "tileIdx", "elevation", "pathIdx").rdd
+      else contoursDs.rdd
+    writeTiles(rows, offsets, outDir, cfg, singleFileName, commit, format, singleBBox)
+  }
+
+  /** The one writer body. Per-tile mode writes each tile in the partition
+    * its rows were traced (and counted) in. Every contract break throws
+    * and names the tile, before a second task can open its file and
+    * before a file with shifted ids survives: a tile met outside its
+    * counted partition, a tile coming back after another, rows out of
+    * (elevation, pathIdx) order, or a tile whose counts differ from the
+    * ones its ids were assigned from. A failed task deletes the file it
+    * had open and commits nothing. */
+  private def writeTiles(
+      rows: RDD[ContourRow],
+      offsets: Map[(String, Int), TileOffsets],
+      outDir: String,
+      cfg: JobConfig,
+      single: Option[String],
+      commit: Boolean,
+      format: String,
+      singleBBox: Option[BBox]): Seq[String] = {
+    val bc = rows.sparkContext.broadcast(offsets)
     val major = cfg.lineCatsMajor
     val medium = cfg.lineCatsMedium
     val osmV = cfg.osmVersion
     val ts = cfg.writeTimestamp
     val pfx = cfg.outputPrefix.getOrElse("")
-    val single = singleFileName
-    // single-output mode (reference processor.py:273-336): one file over
-    // the global bbox, ALL nodes before ALL ways, tiles serialized through
-    // one partition (parallelization disabled, as in the reference)
-    val arranged =
-      if (single.isDefined)
-        contoursDs.coalesce(1).sortWithinPartitions("key", "tileIdx", "elevation", "pathIdx")
-      else
-        contoursDs
-          .repartition(col("key"), col("tileIdx"))
-          .sortWithinPartitions("key", "tileIdx", "elevation", "pathIdx")
-    val files = arranged
-      .mapPartitions { it =>
-        val classifier: Long => String = e => Levels.elevClassifier(major, medium)(e.toInt)
-        var curKey: (String, Int) = null
-        var writer: graft.sinks.TileSink = null
-        var nodeId = 0L
-        var nodeStart = 0L
-        var ways = scala.collection.mutable.ArrayBuffer.empty[PreparedWay]
-        var wayStart = Long.MinValue
-        var fileName: String = null
-        var t0 = 0L
-        val written = scala.collection.mutable.ArrayBuffer.empty[String]
-        def close(): Unit = if (writer != null) {
-          writer.finish(ways.toSeq, wayStart, classifier)
-          written += fileName
-          if (commit && single.isEmpty) Checkpoint.writeCommit(outDir, Checkpoint.Commit(
-            curKey._1, curKey._2, nodeId - nodeStart, ways.size.toLong, fileName,
-            (System.nanoTime() - t0) / 1000000L))
-          writer = null
-          ways = scala.collection.mutable.ArrayBuffer.empty[PreparedWay]
-        }
-        val out = it.flatMap { row =>
-          val k = (row.key, row.tileIdx)
-          if (k != curKey) {
+    val files = rows.mapPartitionsWithIndex { (part, it) =>
+      val classifier: Long => String = e => Levels.elevClassifier(major, medium)(e.toInt)
+      val seen = scala.collection.mutable.HashSet.empty[(String, Int)]
+      var tile: (String, Int) = null
+      var off: TileOffsets = null
+      var tileWays = 0L
+      var lastElevation = 0
+      var lastPathIdx = 0
+      var writer: graft.sinks.TileSink = null
+      var fileName: String = null
+      var nodeId = 0L
+      var wayStart = 0L
+      val ways = scala.collection.mutable.ArrayBuffer.empty[PreparedWay]
+      var t0 = 0L
+      val written = scala.collection.mutable.ArrayBuffer.empty[String]
+      def refuse(msg: String): Nothing =
+        throw new IllegalStateException(s"tile ${tileName(tile._1, tile._2)}: $msg")
+      def endTile(): Unit = if (tile != null) {
+        val nodes = nodeId - off.nodeStart
+        if (nodes != off.nodes || tileWays != off.ways)
+          refuse(s"partition $part holds $nodes nodes / $tileWays ways, " +
+            s"its ids were assigned for ${off.nodes} / ${off.ways}")
+      }
+      def closeFile(): Unit = if (writer != null) {
+        writer.finish(ways.toSeq, wayStart, classifier)
+        writer = null
+        written += fileName
+        if (commit && single.isEmpty) Checkpoint.writeCommit(outDir, Checkpoint.Commit(
+          tile._1, tile._2, off.nodes, off.ways, fileName, (System.nanoTime() - t0) / 1000000L))
+        ways.clear()
+      }
+      def open(path: String, bbox: BBox): Unit = {
+        fileName = path
+        writer = graft.sinks.TileSink.open(path, bbox, format, osmV, ts)
+        nodeId = off.nodeStart
+        wayStart = off.wayStart
+        t0 = System.nanoTime()
+      }
+      try {
+        it.foreach { row =>
+          if (tile == null || row.key != tile._1 || row.tileIdx != tile._2) {
+            endTile()
+            if (single.isEmpty) closeFile()
+            tile = (row.key, row.tileIdx)
+            off = bc.value.getOrElse(tile, refuse("no id offsets were assigned to it"))
+            if (!seen.add(tile)) refuse(s"its rows come back after another tile in partition $part")
+            tileWays = 0L
             if (single.isEmpty) {
-              close()
-              val off = bc.value(k)
-              nodeId = off.nodeStart
-              nodeStart = off.nodeStart
-              wayStart = off.wayStart
-              t0 = System.nanoTime()
+              // the tile's file belongs to the partition its ids were counted in
+              if (off.partition != part)
+                refuse(s"rows in partition $part, but its ids were counted in partition ${off.partition}")
               val bbox = BBox(row.minLon, row.minLat, row.maxLon, row.maxLat)
-              fileName = s"$outDir/${graft.sinks.TileSink.fileName(bbox, row.key, format, pfx)}"
-              writer = graft.sinks.TileSink.open(fileName, bbox, format, osmV, ts)
-            } else {
+              open(s"$outDir/${graft.sinks.TileSink.fileName(bbox, row.key, format, pfx)}", bbox)
+            } else if (writer == null) {
               // one writer for the whole run: global bbox = union of tiles
-              val off = bc.value(k)
-              if (writer == null) {
-                nodeId = off.nodeStart
-                nodeStart = off.nodeStart
-                t0 = System.nanoTime()
-                fileName = s"$outDir/${single.get}"
-                val globalBBox = singleBBox.getOrElse(
-                  BBox(row.minLon, row.minLat, row.maxLon, row.maxLat))
-                writer = graft.sinks.TileSink.open(fileName, globalBBox, format, osmV, ts)
-              }
-              require(nodeId == off.nodeStart,
-                s"single-output tiles must arrive in id order: at $k expected ${off.nodeStart}, have $nodeId")
-              if (wayStart == Long.MinValue) wayStart = off.wayStart
-            }
-            curKey = k
-          }
+              open(s"$outDir/${single.get}",
+                singleBBox.getOrElse(BBox(row.minLon, row.minLat, row.maxLon, row.maxLat)))
+            } else if (nodeId != off.nodeStart)
+              refuse(s"single-output tiles must arrive in id order: expected ${off.nodeStart}, have $nodeId")
+          } else if (row.elevation < lastElevation ||
+              (row.elevation == lastElevation && row.pathIdx <= lastPathIdx))
+            refuse(s"path (${row.elevation}, ${row.pathIdx}) after ($lastElevation, $lastPathIdx)")
+          lastElevation = row.elevation
+          lastPathIdx = row.pathIdx
           val (next, way) = writer.writePath(row.coords, nodeId, row.elevation.toLong)
           nodeId = next
           ways += way
-          Iterator.empty: Iterator[String]
+          tileWays += 1
         }
-        // exhaust, then close trailing writer
-        val drained = out.toArray
-        close()
-        (drained ++ written).iterator
+        endTile()
+        closeFile()
+      } catch {
+        case e: Throwable =>
+          if (writer != null) {
+            try writer.finish(Nil, wayStart, classifier) catch { case _: Throwable => }
+            graft.core.Fs.delete(fileName)
+          }
+          throw e
       }
-      .collect()
+      written.iterator
+    }.collect()
     files.toSeq.sorted
   }
 
   /** Convenience end-to-end run. */
   def run(spark: SparkSession, paths: Seq[String], outDir: String, cfg: JobConfig): Seq[String] = {
     graft.core.Fs.mkdirs(outDir)
-    val ts = tiles(spark, paths, cfg)
-    val cs = contours(ts, cfg).persist()
-    try {
-      val offs = idOffsets(cs, cfg)
-      writeOsmXml(cs, offs, outDir, cfg)
-    } finally cs.unpersist()
+    val cs = tracedRows(tiles(spark, paths, cfg), cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    try writeTiles(cs, idOffsets(cs, cfg), outDir, cfg, None, commit = false,
+      graft.sinks.TileSink.OsmXmlFormat, None)
+    finally cs.unpersist()
   }
 
   /** Single-output mode (reference --max-nodes-per-tile 0,
@@ -524,14 +612,15 @@ object RasterPipeline {
     // driver's footprint is O(commit records), not O(tiles)
     val tilesTotal = tilesAll.count()
     val todo = tilesAll.filter(t => !bcCommitted.value.contains((t.key, t.tileIdx)))
-    val cs = contours(todo, cfg).persist()
+    val cs = tracedRows(todo, cfg).persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      val freshCounts = tileCounts(cs).toMap
-      val committedCounts = committed.map(c => ((c.key, c.tileIdx), (c.nodes, c.ways))).toMap
+      val fresh = tileCounts(cs.map(r => (r.key, r.tileIdx, r.nbNodes)))
+      val committedCounts = committed.map(c => TileCount(c.key, c.tileIdx, c.nodes, c.ways, -1))
       // merged deterministic prefix sum over ALL tiles (committed counts
       // win for tiles present in both) — same walk as idOffsets
-      val offsets = prefixSum((freshCounts ++ committedCounts).toSeq, cfg)
-      val files = writeOsmXml(cs, offsets, outDir, cfg, commit = true, format = format)
+      val merged = (fresh ++ committedCounts).map(c => (c.key, c.tileIdx) -> c).toMap
+      val offsets = prefixSum(merged.values.toSeq, cfg)
+      val files = writeTiles(cs, offsets, outDir, cfg, None, commit = true, format, None)
       // metrics + lineage tables
       val after = Checkpoint.readCommits(outDir)
       if (after.nonEmpty) {

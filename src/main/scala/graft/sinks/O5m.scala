@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.io.{ByteArrayOutputStream, OutputStream}
+import java.io.OutputStream
 import graft.core.BBox
 
 /** o5m sink, wire-compatible with the reference's writer
@@ -61,68 +61,77 @@ final class O5mWriter(
 
   private val table = new O5mStringTable()
   private var lastNodeId = 0L
+  // reused buffers: one entity's payload, one way's refs, and the framed
+  // datasets of one call, written to `out` in one piece
+  private val entity = new ByteBuf(64)
+  private val refs = new ByteBuf(64)
+  private val framed = new ByteBuf(1 << 16)
 
   private def writeReset(): Unit = {
-    out.write(O5m.Reset)
+    framed.byte(O5m.Reset)
     lastNodeId = 0L
     table.reset()
   }
 
-  private def dataset(typ: Int, payload: Array[Byte]): Unit = {
-    out.write(typ)
-    out.write(Varint.unsigned(payload.length.toLong))
-    out.write(payload)
+  private def dataset(typ: Int, payload: ByteBuf): Unit = {
+    framed.byte(typ)
+    framed.varint(payload.size.toLong)
+    framed.append(payload)
   }
+
+  private def flush(): Unit = { framed.writeTo(out); framed.reset() }
 
   // header: reset, o5m2 marker, file timestamp, bbox
   locally {
     writeReset()
-    out.write(O5m.HeaderType)
-    out.write(Varint.unsigned(4L))
-    out.write("o5m2".getBytes("US-ASCII"))
-    dataset(O5m.TimestampType, Varint.signed(fileTimestamp))
-    val bb = new ByteArrayOutputStream()
-    Seq(bbox.minLon, bbox.minLat, bbox.maxLon, bbox.maxLat)
-      .foreach(d => Varint.writeSigned(bb, O5m.quantize(d)))
-    dataset(O5m.BBoxType, bb.toByteArray)
+    framed.byte(O5m.HeaderType)
+    framed.varint(4L)
+    framed.bytes("o5m2".getBytes("US-ASCII"))
+    entity.reset()
+    entity.signed(fileTimestamp)
+    dataset(O5m.TimestampType, entity)
+    entity.reset()
+    Seq(bbox.minLon, bbox.minLat, bbox.maxLon, bbox.maxLat).foreach(d => entity.signed(O5m.quantize(d)))
+    dataset(O5m.BBoxType, entity)
+    flush()
   }
 
-  private def stringPair(a: String, b: String): Array[Byte] = {
-    val o = new ByteArrayOutputStream()
-    o.write(0)
-    o.write(a.getBytes("UTF-8")); o.write(0)
-    o.write(b.getBytes("UTF-8")); o.write(0)
-    o.toByteArray
-  }
+  /** \0 key \0 value \0 (U+0000 is one zero byte in UTF-8). */
+  private def stringPair(a: String, b: String): Array[Byte] =
+    ("\u0000" + a + "\u0000" + b + "\u0000").getBytes("UTF-8")
 
-  private def versionChunk(first: Boolean, o: ByteArrayOutputStream): Unit = {
-    Varint.writeUnsigned(o, 1L) // version
-    if (first && writeTimestamp) Varint.writeSigned(o, fileTimestamp)
-    else Varint.writeSigned(o, 0L) // timestamp 0 => no more version info
+  private val emptyUser = Array[Byte](0, 0, 0)
+
+  private def versionChunk(first: Boolean, o: ByteBuf): Unit = {
+    o.varint(1L) // version
+    if (first && writeTimestamp) o.signed(fileTimestamp)
+    else o.signed(0L) // timestamp 0 => no more version info
     if (writeTimestamp) {
-      Varint.writeSigned(o, if (first) 1L else 0L) // changeset delta
-      o.write(table.stringOrIndex(Array[Byte](0, 0, 0))) // empty uid/user
+      o.signed(if (first) 1L else 0L) // changeset delta
+      o.bytes(table.stringOrIndex(emptyUser)) // empty uid/user
     }
   }
 
-  /** Nodes: (lon1e7, lat1e7) pairs with contiguous ids from startNodeId.
-    * Resets delta state first (the reference does per 32000-node chunk). */
-  def writeNodes(nodes: Iterable[(Long, Long)], startNodeId: Long): Unit = {
-    if (nodes.isEmpty) return
+  /** Nodes: coords (1e-7 degrees) in lons/lats(0 until n), contiguous ids
+    * from startNodeId. Resets delta state first (the reference does per
+    * 32000-node chunk). */
+  def writeNodes(startNodeId: Long, lons: Array[Long], lats: Array[Long], n: Int): Unit = {
+    if (n == 0) return
     writeReset()
-    var first = true
     var lastLon = 0L
     var lastLat = 0L
-    nodes.foreach { case (lon, lat) =>
-      val o = new ByteArrayOutputStream(24)
-      Varint.writeSigned(o, if (first) startNodeId else 1L)
-      versionChunk(first, o)
-      Varint.writeSigned(o, lon - lastLon)
-      Varint.writeSigned(o, lat - lastLat)
-      dataset(O5m.NodeType, o.toByteArray)
-      lastLon = lon; lastLat = lat
-      first = false
+    var i = 0
+    while (i < n) {
+      entity.reset()
+      entity.signed(if (i == 0) startNodeId else 1L)
+      versionChunk(i == 0, entity)
+      entity.signed(lons(i) - lastLon)
+      entity.signed(lats(i) - lastLat)
+      dataset(O5m.NodeType, entity)
+      lastLon = lons(i); lastLat = lats(i)
+      i += 1
     }
+    flush()
   }
 
   /** Ways after all nodes; refs delta-coded across ways. */
@@ -132,26 +141,26 @@ final class O5mWriter(
     writeReset()
     var first = true
     ways.foreach { w =>
-      val o = new ByteArrayOutputStream(64)
-      Varint.writeSigned(o, if (first) startWayId else 1L)
-      versionChunk(first, o)
-      val refs = new ByteArrayOutputStream(32)
-      Varint.writeSigned(refs, w.firstNodeId - lastNodeId)
+      entity.reset()
+      entity.signed(if (first) startWayId else 1L)
+      versionChunk(first, entity)
+      refs.reset()
+      refs.signed(w.firstNodeId - lastNodeId)
       var i = 1L
-      while (i < w.nbNodes) { Varint.writeSigned(refs, 1L); i += 1 }
+      while (i < w.nbNodes) { refs.signed(1L); i += 1 }
       if (w.closed) {
-        Varint.writeSigned(refs, -(w.nbNodes - 1))
+        refs.signed(-(w.nbNodes - 1))
         lastNodeId = w.firstNodeId
       } else lastNodeId = w.firstNodeId + w.nbNodes - 1
-      val refBytes = refs.toByteArray
-      Varint.writeUnsigned(o, refBytes.length.toLong)
-      o.write(refBytes)
-      o.write(table.stringOrIndex(stringPair("ele", w.elevation.toString)))
-      o.write(table.stringOrIndex(stringPair("contour", "elevation")))
-      o.write(table.stringOrIndex(stringPair("contour_ext", classifier(w.elevation))))
-      dataset(O5m.WayType, o.toByteArray)
+      entity.varint(refs.size.toLong)
+      entity.append(refs)
+      entity.bytes(table.stringOrIndex(stringPair("ele", w.elevation.toString)))
+      entity.bytes(table.stringOrIndex(stringPair("contour", "elevation")))
+      entity.bytes(table.stringOrIndex(stringPair("contour_ext", classifier(w.elevation))))
+      dataset(O5m.WayType, entity)
       first = false
     }
+    flush()
   }
 
   def done(): Unit = {
@@ -299,6 +308,6 @@ object O5mReader {
           }
       }
     }
-    Decoded(bbox, nodes.toSeq, ways.toSeq)
+    Decoded(bbox, nodes.toVector, ways.toVector)
   }
 }

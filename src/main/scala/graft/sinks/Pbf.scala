@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.io.{ByteArrayOutputStream, OutputStream}
+import java.io.OutputStream
 import java.util.zip.{Deflater, Inflater}
 import graft.core.BBox
 
@@ -14,42 +14,17 @@ import graft.core.BBox
   * unit = 1e-7 degree, same quantization as the o5m sink. */
 object Pbf {
 
-  // ---- minimal protobuf writer ----
-  final class ProtoOut {
-    val out = new ByteArrayOutputStream()
-    def writeVarint(v0: Long): Unit = {
-      var v = v0
-      while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
-    }
-    def key(field: Int, wire: Int): Unit = writeVarint((field << 3 | wire).toLong)
-    def int64(field: Int, v: Long): Unit = { key(field, 0); writeVarint(v) }
-    def sint64(field: Int, v: Long): Unit = { key(field, 0); writeVarint((v << 1) ^ (v >> 63)) }
-    def bytes(field: Int, b: Array[Byte]): Unit = {
-      key(field, 2); writeVarint(b.length.toLong); out.write(b)
-    }
+  /** Protobuf field writes over a ByteBuf (a value class: no wrapper is
+    * allocated per call). */
+  implicit final class ProtoOut(val b: ByteBuf) extends AnyVal {
+    def key(field: Int, wire: Int): Unit = b.varint((field << 3 | wire).toLong)
+    def int64(field: Int, v: Long): Unit = { key(field, 0); b.varint(v) }
+    def sint64(field: Int, v: Long): Unit = { key(field, 0); b.signed(v) }
+    def bytes(field: Int, v: Array[Byte]): Unit = { key(field, 2); b.varint(v.length.toLong); b.bytes(v) }
     def string(field: Int, s: String): Unit = bytes(field, s.getBytes("UTF-8"))
-    def packedSint64(field: Int, vs: Iterable[Long]): Unit = {
-      val p = new ProtoOut
-      vs.foreach(v => p.writeVarint((v << 1) ^ (v >> 63)))
-      bytes(field, p.toByteArray)
-    }
-    def packedUint32(field: Int, vs: Iterable[Int]): Unit = {
-      val p = new ProtoOut
-      vs.foreach(v => p.writeVarint(v.toLong))
-      bytes(field, p.toByteArray)
-    }
-    def toByteArray: Array[Byte] = out.toByteArray
-  }
-
-  def zlib(data: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.DEFAULT_COMPRESSION)
-    d.setInput(data); d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
+    /** A length-delimited field holding `msg` (a sub-message or a packed
+      * repeated field). */
+    def message(field: Int, msg: ByteBuf): Unit = { key(field, 2); b.varint(msg.size.toLong); b.append(msg) }
   }
 
   def unzlib(data: Array[Byte], rawSize: Int): Array[Byte] = {
@@ -61,111 +36,140 @@ object Pbf {
     inf.end()
     out
   }
-
-  /** One framed blob: 4-byte BE BlobHeader length, BlobHeader, Blob. */
-  def writeBlob(out: OutputStream, blobType: String, payload: Array[Byte]): Unit = {
-    val blob = new ProtoOut
-    blob.int64(2, payload.length.toLong) // raw_size
-    blob.bytes(3, zlib(payload)) // zlib_data
-    val blobBytes = blob.toByteArray
-    val header = new ProtoOut
-    header.string(1, blobType)
-    header.int64(3, blobBytes.length.toLong) // datasize
-    val headerBytes = header.toByteArray
-    out.write(Array[Byte](
-      (headerBytes.length >>> 24).toByte, (headerBytes.length >>> 16).toByte,
-      (headerBytes.length >>> 8).toByte, headerBytes.length.toByte))
-    out.write(headerBytes)
-    out.write(blobBytes)
-  }
 }
 
 final class PbfWriter(out: OutputStream, bbox: BBox, generator: String = "graft 0.1.0") {
   import Pbf._
 
+  // one buffer per nesting level, reused for every message: a packed
+  // field inside a dense-node or way message, inside a primitive group,
+  // inside the block payload; then the deflated payload and the framing
+  private val packed = new ByteBuf
+  private val msg = new ByteBuf
+  private val group = new ByteBuf(1 << 16)
+  private val block = new ByteBuf(1 << 16)
+  private val zipped = new ByteBuf(1 << 16)
+  private val blobHead = new ByteBuf(16)
+  private val header = new ByteBuf(32)
+  // zlib level of osmium's writer; reset() per blob keeps the bytes of a
+  // fresh Deflater without allocating one
+  private val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION)
+
   locally {
-    val hb = new ProtoOut
-    val bb = new ProtoOut
-    bb.sint64(1, (bbox.minLon * 1e9).toLong) // left, nanodegrees
-    bb.sint64(2, (bbox.maxLon * 1e9).toLong) // right
-    bb.sint64(3, (bbox.maxLat * 1e9).toLong) // top
-    bb.sint64(4, (bbox.minLat * 1e9).toLong) // bottom
-    hb.bytes(1, bb.toByteArray)
-    hb.string(4, "OsmSchema-V0.6")
-    hb.string(4, "DenseNodes")
-    hb.string(16, generator)
-    writeBlob(out, "OSMHeader", hb.toByteArray)
+    msg.reset()
+    msg.sint64(1, (bbox.minLon * 1e9).toLong) // left, nanodegrees
+    msg.sint64(2, (bbox.maxLon * 1e9).toLong) // right
+    msg.sint64(3, (bbox.maxLat * 1e9).toLong) // top
+    msg.sint64(4, (bbox.minLat * 1e9).toLong) // bottom
+    block.reset()
+    block.message(1, msg)
+    block.string(4, "OsmSchema-V0.6")
+    block.string(4, "DenseNodes")
+    block.string(16, generator)
+    writeBlob("OSMHeader")
   }
 
-  /** Dense nodes: ids contiguous from startId, coords in 1e-7 degrees. */
-  def writeDenseNodes(startId: Long, coords: Iterable[(Long, Long)]): Unit = {
-    if (coords.isEmpty) return
-    val dense = new ProtoOut
-    val n = coords.size
-    val ids = new Array[Long](n)
-    val lats = new Array[Long](n)
-    val lons = new Array[Long](n)
-    var lastLat = 0L
-    var lastLon = 0L
+  /** One framed blob of the payload in `block`: 4-byte BE BlobHeader
+    * length, BlobHeader, Blob (raw_size + zlib_data). */
+  private def writeBlob(blobType: String): Unit = {
+    zipped.deflate(deflater, block)
+    blobHead.reset()
+    blobHead.int64(2, block.size.toLong) // raw_size
+    blobHead.key(3, 2) // zlib_data, its bytes follow from `zipped`
+    blobHead.varint(zipped.size.toLong)
+    header.reset()
+    header.string(1, blobType)
+    header.int64(3, (blobHead.size + zipped.size).toLong) // datasize
+    val n = header.size
+    out.write(n >>> 24); out.write(n >>> 16); out.write(n >>> 8); out.write(n)
+    header.writeTo(out)
+    blobHead.writeTo(out)
+    zipped.writeTo(out)
+  }
+
+  /** Packed sint64 field of the deltas of `vs(0 until n)`. */
+  private def packedDeltas(field: Int, vs: Array[Long], n: Int): Unit = {
+    packed.reset()
+    var last = 0L
     var i = 0
-    coords.foreach { case (lon, lat) =>
-      ids(i) = if (i == 0) startId else 1L
-      lats(i) = lat - lastLat
-      lons(i) = lon - lastLon
-      lastLat = lat; lastLon = lon
-      i += 1
-    }
-    dense.packedSint64(1, ids)
-    dense.packedSint64(8, lats)
-    dense.packedSint64(9, lons)
-    val group = new ProtoOut
-    group.bytes(2, dense.toByteArray)
-    writePrimitiveBlock(group.toByteArray, Seq(""))
+    while (i < n) { packed.signed(vs(i) - last); last = vs(i); i += 1 }
+    msg.message(field, packed)
+  }
+
+  /** Dense nodes: ids contiguous from startId, coords in 1e-7 degrees in
+    * `lons`/`lats` (0 until n). */
+  def writeDenseNodes(startId: Long, lons: Array[Long], lats: Array[Long], n: Int): Unit = {
+    if (n == 0) return
+    msg.reset()
+    packed.reset()
+    packed.signed(startId)
+    var i = 1
+    while (i < n) { packed.signed(1L); i += 1 }
+    msg.message(1, packed)
+    packedDeltas(8, lats, n)
+    packedDeltas(9, lons, n)
+    group.reset()
+    group.message(2, msg)
+    writePrimitiveBlock(Seq(""))
   }
 
   /** Ways with ele/contour tags via the block string table. */
   def writeWays(ways: Iterable[PreparedWay], startWayId: Long, classifier: Long => String): Unit = {
-    if (ways.isEmpty) return
     // chunk ways into blocks of <=8000 entities (mirroring the dense-node
     // chunking): a single merged-output run can hold millions of ways, and
     // one unchunked PrimitiveBlock would blow the PBF spec's 16/32 MiB
     // uncompressed blob limit that osmium/osmosis readers enforce. Each
     // block carries its own string table.
     var wayId = startWayId
-    ways.grouped(8000).foreach { chunk =>
+    val it = ways.iterator
+    while (it.hasNext) {
       // string table: index 0 must be empty (dense keys_vals delimiter)
       val strings = scala.collection.mutable.LinkedHashMap[String, Int]("" -> 0)
       def sid(s: String): Int = strings.getOrElseUpdate(s, strings.size)
-      val group = new ProtoOut
-      chunk.foreach { w =>
-        val way = new ProtoOut
-        way.int64(1, wayId)
-        val keys = Seq(sid("ele"), sid("contour"), sid("contour_ext"))
-        val vals = Seq(sid(w.elevation.toString), sid("elevation"), sid(classifier(w.elevation)))
-        way.packedUint32(2, keys)
-        way.packedUint32(3, vals)
-        val refs = (w.firstNodeId until (w.firstNodeId + w.nbNodes)) ++
-          (if (w.closed) Seq(w.firstNodeId) else Nil)
+      val keys = Array(sid("ele"), sid("contour"), sid("contour_ext"))
+      // the tag-value string ids of each elevation, added to the table in
+      // the order the elevation's first way names them
+      val valSids = scala.collection.mutable.LongMap.empty[Array[Int]]
+      group.reset()
+      var inBlock = 0
+      while (inBlock < 8000 && it.hasNext) {
+        val w = it.next()
+        val vals = valSids.getOrElseUpdate(w.elevation,
+          Array(sid(w.elevation.toString), sid("elevation"), sid(classifier(w.elevation))))
+        msg.reset()
+        msg.int64(1, wayId)
+        packed.reset(); keys.foreach(k => packed.varint(k.toLong)); msg.message(2, packed)
+        packed.reset(); vals.foreach(v => packed.varint(v.toLong)); msg.message(3, packed)
+        packed.reset()
         var last = 0L
-        way.packedSint64(8, refs.map { r => val d = r - last; last = r; d })
-        group.bytes(3, way.toByteArray)
+        var r = w.firstNodeId
+        val end = w.firstNodeId + w.nbNodes
+        while (r < end) { packed.signed(r - last); last = r; r += 1 }
+        if (w.closed) packed.signed(w.firstNodeId - last)
+        msg.message(8, packed)
+        group.message(3, msg)
         wayId += 1
+        inBlock += 1
       }
-      writePrimitiveBlock(group.toByteArray, strings.keys.toSeq)
+      writePrimitiveBlock(strings.keys)
     }
   }
 
-  private def writePrimitiveBlock(groupBytes: Array[Byte], strings: Seq[String]): Unit = {
-    val block = new ProtoOut
-    val st = new ProtoOut
-    strings.foreach(s => st.bytes(1, s.getBytes("UTF-8")))
-    block.bytes(1, st.toByteArray)
-    block.key(2, 2); block.writeVarint(groupBytes.length.toLong); block.out.write(groupBytes)
+  /** PrimitiveBlock of the group in `group` with its string table. */
+  private def writePrimitiveBlock(strings: Iterable[String]): Unit = {
+    msg.reset()
+    strings.foreach(s => msg.bytes(1, s.getBytes("UTF-8")))
+    block.reset()
+    block.message(1, msg)
+    block.message(2, group)
     block.int64(17, 100L) // granularity: 100 nanodeg = 1e-7 deg
-    writeBlob(out, "OSMData", block.toByteArray)
+    writeBlob("OSMData")
   }
 
-  def done(): Unit = out.close()
+  def done(): Unit = {
+    deflater.end()
+    out.close()
+  }
 }
 
 /** Minimal PBF decoder for round-trip verification (plays the role of the
@@ -258,7 +262,7 @@ object PbfReader {
         decodeData(payload, nodes, ways)
       }
     }
-    Decoded(bbox, features.toSeq, nodes.toSeq, ways.toSeq)
+    Decoded(bbox, features.toSeq, nodes.toVector, ways.toVector)
   }
 
   private def decodeData(
@@ -288,59 +292,63 @@ object PbfReader {
         (k >> 3).toInt match {
           case 2 => // dense
             val dense = new ProtoIn(group.lenBytes())
-            var ids: Seq[Long] = Nil
-            var lats: Seq[Long] = Nil
-            var lons: Seq[Long] = Nil
+            var ids = Array.emptyLongArray
+            var lats = Array.emptyLongArray
+            var lons = Array.emptyLongArray
             while (dense.hasMore) {
               val kk = dense.varint()
               (kk >> 3).toInt match {
-                case 1 => ids = packed(dense.lenBytes())
-                case 8 => lats = packed(dense.lenBytes())
-                case 9 => lons = packed(dense.lenBytes())
+                case 1 => ids = packed(dense.lenBytes(), signed = true)
+                case 8 => lats = packed(dense.lenBytes(), signed = true)
+                case 9 => lons = packed(dense.lenBytes(), signed = true)
                 case _ => dense.skip((kk & 7).toInt)
               }
             }
+            require(lats.length == ids.length && lons.length == ids.length,
+              s"dense nodes: ${ids.length} ids, ${lats.length} lats, ${lons.length} lons")
             var id = 0L; var lat = 0L; var lon = 0L
-            ids.indices.foreach { i =>
+            var i = 0
+            while (i < ids.length) {
               id += ids(i); lat += lats(i); lon += lons(i)
               nodes += ((id, lon * scale, lat * scale))
+              i += 1
             }
           case 3 => // way
             val way = new ProtoIn(group.lenBytes())
             var id = 0L
-            var keys: Seq[Long] = Nil
-            var vals: Seq[Long] = Nil
-            var refs: Seq[Long] = Nil
+            var keys = Array.emptyLongArray
+            var vals = Array.emptyLongArray
+            var refs = Array.emptyLongArray
             while (way.hasMore) {
               val kk = way.varint()
               (kk >> 3).toInt match {
                 case 1 => id = way.varint()
-                case 2 => keys = packedU(way.lenBytes())
-                case 3 => vals = packedU(way.lenBytes())
+                case 2 => keys = packed(way.lenBytes(), signed = false)
+                case 3 => vals = packed(way.lenBytes(), signed = false)
                 case 8 =>
-                  var last = 0L
-                  refs = packed(way.lenBytes()).map { d => last += d; last }
+                  refs = packed(way.lenBytes(), signed = true)
+                  var i = 1
+                  while (i < refs.length) { refs(i) += refs(i - 1); i += 1 }
                 case _ => way.skip((kk & 7).toInt)
               }
             }
-            val tags = keys.zip(vals).map { case (ki, vi) => (strings(ki.toInt), strings(vi.toInt)) }
-            ways += ((id, refs, tags))
+            val tags = keys.toSeq.zip(vals).map { case (ki, vi) => (strings(ki.toInt), strings(vi.toInt)) }
+            ways += ((id, scala.collection.immutable.ArraySeq.unsafeWrapArray(refs), tags))
           case _ => group.skip((k & 7).toInt)
         }
       }
     }
   }
 
-  private def packed(b: Array[Byte]): Seq[Long] = {
+  /** A packed repeated varint field, decoded into a primitive array (the
+    * byte count with a clear high bit is the value count). */
+  private def packed(b: Array[Byte], signed: Boolean): Array[Long] = {
+    var n = 0
+    b.foreach(x => if ((x & 0x80) == 0) n += 1)
     val in = new ProtoIn(b)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    while (in.hasMore) out += in.zigzag()
-    out.toSeq
-  }
-  private def packedU(b: Array[Byte]): Seq[Long] = {
-    val in = new ProtoIn(b)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Long]
-    while (in.hasMore) out += in.varint()
-    out.toSeq
+    val out = new Array[Long](n)
+    var i = 0
+    while (i < n) { out(i) = if (signed) in.zigzag() else in.varint(); i += 1 }
+    out
   }
 }

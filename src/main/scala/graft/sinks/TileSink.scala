@@ -70,21 +70,26 @@ object TileSink {
 }
 
 /** Shared chunked-node state machine of the binary sinks (pbf/o5m):
-  * paths append their quantized nodes to a pending buffer; a buffer past
-  * `chunkSize` flushes as one node block to the format writer; ways write
-  * at finish. Closed paths drop their repeated last point — the way will
-  * close by re-using the first id (same contract as the XML writer). */
+  * paths append their quantized nodes to primitive `lons`/`lats` buffers;
+  * a buffer past `chunkSize` flushes as one node block to the format
+  * writer; ways write at finish. Closed paths drop their repeated last
+  * point — the way will close by re-using the first id (same contract as
+  * the XML writer). */
 abstract class ChunkedNodeSink(chunkSize: Int) extends TileSink {
-  protected def writeNodeChunk(startId: Long, nodes: collection.Seq[(Long, Long)]): Unit
+  /** One node block: ids contiguous from startId, coords (1e-7 degrees)
+    * in lons/lats(0 until n). */
+  protected def writeNodeChunk(startId: Long, lons: Array[Long], lats: Array[Long], n: Int): Unit
   protected def writeWaysAndClose(ways: Seq[PreparedWay], startWayId: Long, classifier: Long => String): Unit
 
-  private val pending = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+  private var lons = new Array[Long](chunkSize + 1)
+  private var lats = new Array[Long](chunkSize + 1)
+  private var pending = 0
   private var chunkStartId = -1L
   private var nextId = -1L
 
-  private def flushChunk(): Unit = if (pending.nonEmpty) {
-    writeNodeChunk(chunkStartId, pending)
-    pending.clear()
+  private def flushChunk(): Unit = if (pending > 0) {
+    writeNodeChunk(chunkStartId, lons, lats, pending)
+    pending = 0
     chunkStartId = nextId
   }
 
@@ -93,13 +98,21 @@ abstract class ChunkedNodeSink(chunkSize: Int) extends TileSink {
     val n = coords.length / 2
     val closed = n >= 2 && coords(0) == coords(2 * (n - 1)) && coords(1) == coords(2 * (n - 1) + 1)
     val emitted = if (closed) n - 1 else n
+    // a chunk flushes only after the path that crosses chunkSize
+    if (pending + emitted > lons.length) {
+      val cap = math.max(lons.length * 2, pending + emitted)
+      lons = java.util.Arrays.copyOf(lons, cap)
+      lats = java.util.Arrays.copyOf(lats, cap)
+    }
     var i = 0
     while (i < emitted) {
-      pending += ((O5m.quantize(coords(2 * i)), O5m.quantize(coords(2 * i + 1))))
+      lons(pending) = O5m.quantize(coords(2 * i))
+      lats(pending) = O5m.quantize(coords(2 * i + 1))
+      pending += 1
       i += 1
     }
     nextId += emitted
-    if (pending.size > chunkSize) flushChunk()
+    if (pending > chunkSize) flushChunk()
     (nextId, PreparedWay(nextId - emitted, emitted.toLong, closed, elevation))
   }
 
@@ -113,8 +126,8 @@ abstract class ChunkedNodeSink(chunkSize: Int) extends TileSink {
   * via osmium the same way, pbfUtil.py:110-148), ways at finish. */
 final class PbfTileSink(out: java.io.OutputStream, bbox: BBox) extends ChunkedNodeSink(8000) {
   private val w = new PbfWriter(out, bbox)
-  protected def writeNodeChunk(startId: Long, nodes: collection.Seq[(Long, Long)]): Unit =
-    w.writeDenseNodes(startId, nodes)
+  protected def writeNodeChunk(startId: Long, lons: Array[Long], lats: Array[Long], n: Int): Unit =
+    w.writeDenseNodes(startId, lons, lats, n)
   protected def writeWaysAndClose(ways: Seq[PreparedWay], startWayId: Long, classifier: Long => String): Unit = {
     w.writeWays(ways, startWayId, classifier)
     w.done()
@@ -139,8 +152,8 @@ final class OsmXmlTileSink(out: java.io.OutputStream, bbox: BBox,
 final class O5mTileSink(out: java.io.OutputStream, bbox: BBox,
     fileTimestamp: Long = 0L, writeTimestamp: Boolean = false) extends ChunkedNodeSink(32000) {
   private val w = new O5mWriter(out, bbox, fileTimestamp, writeTimestamp)
-  protected def writeNodeChunk(startId: Long, nodes: collection.Seq[(Long, Long)]): Unit =
-    w.writeNodes(nodes, startId)
+  protected def writeNodeChunk(startId: Long, lons: Array[Long], lats: Array[Long], n: Int): Unit =
+    w.writeNodes(startId, lons, lats, n)
   protected def writeWaysAndClose(ways: Seq[PreparedWay], startWayId: Long, classifier: Long => String): Unit = {
     w.writeWays(ways, startWayId, classifier)
     w.done()
