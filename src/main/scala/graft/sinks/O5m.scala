@@ -61,11 +61,11 @@ final class O5mWriter(
 
   private val table = new O5mStringTable()
   private var lastNodeId = 0L
-  // reused buffers: one entity's payload, one way's refs, and the framed
-  // datasets of one call, written to `out` in one piece
+  // reused buffers: one entity's payload, one way's refs, and framed
+  // datasets on their way to `out` in pieces of about 64 KiB
   private val entity = new ByteBuf(64)
   private val refs = new ByteBuf(64)
-  private val framed = new ByteBuf(1 << 16)
+  private val framed = new ByteBuf(1 << 17)
 
   private def writeReset(): Unit = {
     framed.byte(O5m.Reset)
@@ -77,6 +77,7 @@ final class O5mWriter(
     framed.byte(typ)
     framed.varint(payload.size.toLong)
     framed.append(payload)
+    if (framed.size >= (1 << 16)) flush()
   }
 
   private def flush(): Unit = { framed.writeTo(out); framed.reset() }

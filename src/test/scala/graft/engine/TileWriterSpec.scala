@@ -86,4 +86,22 @@ class TileWriterSpec extends AnyFunSuite {
       } finally cs.unpersist()
     } finally Fs.deleteRecursive(dir)
   }
+
+  test("a resumed run rewrites a lost tile byte-identically, at the ids the committed tiles leave it") {
+    val dir = Files.createTempDirectory("tile-writer-resume").toString
+    try {
+      val dem = SynthDem.writeHgt(s"$dir/dem", 43, 6)
+      val out = s"$dir/out"
+      val fresh = RasterPipeline.runResumable(spark, Seq(dem), out, cfg, TileSink.PbfFormat)
+      assert(fresh.tilesTotal >= 3 && fresh.tilesWritten == fresh.tilesTotal)
+      // a middle tile: committed tiles on both sides of it in id order
+      val lost = Checkpoint.readCommits(out).sortBy(c => (c.key, c.tileIdx)).apply(fresh.tilesTotal / 2)
+      val bytes = Fs.readAllBytes(lost.file)
+      Checkpoint.deleteCommit(out, lost.key, lost.tileIdx)
+      Fs.delete(lost.file)
+      val resumed = RasterPipeline.runResumable(spark, Seq(dem), out, cfg, TileSink.PbfFormat)
+      assert(resumed.tilesWritten == 1 && resumed.tilesSkipped == fresh.tilesTotal - 1)
+      assert(java.util.Arrays.equals(Fs.readAllBytes(lost.file), bytes))
+    } finally Fs.deleteRecursive(dir)
+  }
 }
