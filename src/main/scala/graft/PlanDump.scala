@@ -1,23 +1,52 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import graft.engine.{Queries, SpatialJoin, Ann}
 
-/** Writes PLANS.md: `explain(formatted)` of the headline operators with
-  * the plan properties each one is designed around. Regenerate with
+/** Dumps `explain(formatted)` plans at sf0.001 (plan SHAPE is
+  * scale-independent). Two modes, one session:
   *   sbt "runMain graft.PlanDump"
-  * after touching any of these paths. */
+  * writes PLANS.md: the headline operators with the plan properties each
+  * one is designed around — regenerate after touching any of these paths;
+  *   sbt "runMain graft.PlanDump <suffix> <gate> [gate ...]"
+  * writes plans/r07/<gate>_<suffix>.txt per named gate (before/after
+  * evidence for a plan change). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
+    require(args.length != 1, "usage: PlanDump [<suffix> <gate> [gate ...]]")
     val spark = SparkSession.builder()
       .master("local[4]")
       .appName("graft-plan-dump")
       .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
+    if (args.isEmpty) writePlansMd(spark, dir)
+    else writeGatePlans(spark, dir, args.head, args.tail.toSet)
+    spark.stop()
+  }
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+
+  private def writeGatePlans(
+      spark: SparkSession, dir: String, suffix: String, names: Set[String]): Unit = {
+    val unknown = names -- Queries.all.map(_.name)
+    require(unknown.isEmpty, s"unknown gate(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    graft.core.Fs.mkdirs("plans/r07")
+    Queries.all.filter(q => names.contains(q.name)).foreach { q =>
+      val txt = formatted(q.impl(spark, dir))
+      graft.core.Fs.writeString(s"plans/r07/${q.name}_$suffix.txt", txt)
+      println(s"wrote plans/r07/${q.name}_$suffix.txt (${txt.length} chars)")
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession, dir: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline operators\n\n")
     sb.append("Generated by `graft.PlanDump` at sf0.001 (plan SHAPE is scale-independent;\n")
@@ -26,8 +55,7 @@ object PlanDump {
 
     def dump(title: String, note: String, df: DataFrame): Unit = {
       sb.append(s"\n## $title\n\n$note\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      sb.append(formatted(df))
       sb.append("```\n")
     }
 
@@ -152,6 +180,5 @@ object PlanDump {
 
     graft.core.Fs.writeString("PLANS.md", sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")
-    spark.stop()
   }
 }

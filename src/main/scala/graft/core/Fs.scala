@@ -186,9 +186,9 @@ object Fs {
     try out.write(bytes) finally out.close()
   }
 
-  /** Unique driver-local scratch directory under java.io.tmpdir (bench /
-    * profile harness use; pipeline outputs take caller-supplied roots on
-    * any Hadoop-FS scheme instead). */
+  /** Unique driver-local scratch directory under java.io.tmpdir (plan
+    * dumps; pipeline outputs take caller-supplied roots on any Hadoop-FS
+    * scheme instead). */
   def createTempDir(prefix: String): String = {
     val d = s"${sys.props("java.io.tmpdir").stripSuffix("/")}/$prefix-" +
       java.util.UUID.randomUUID().toString.take(12)

@@ -42,14 +42,18 @@ object Ann {
   def norm(a: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     call_function("vec_norm", a)
 
-  /** Spread a SMALL scan before a compute-heavy stage (r7, guide §2.5):
-    * a tiny vector table arrives as ONE scan partition, and when the pair
-    * join broadcasts, the entire O(pairs · dim) similarity stage inherits
-    * that single partition — one core does all the flops. Scale-adaptive:
-    * identity whenever the input already carries >= defaultParallelism
-    * partitions (any real-scale table), so no shuffle is ever added at
-    * scale. */
-  private def spreadSmall(df: DataFrame): DataFrame = {
+  /** Spread a SMALL scan across the cluster before a compute-heavy narrow
+    * kernel: a tiny input (one parquet file at gate scale) arrives as a
+    * single scan partition, which would serialize the whole kernel on one
+    * core (guide §2.5, input-layout skew — "repartition immediately after
+    * the read"); when a pair join then broadcasts, the entire
+    * O(pairs · dim) similarity stage inherits that single partition.
+    * SCALE-ADAPTIVE, not a local[32] tune: when the scan already carries
+    * >= defaultParallelism partitions (any real-scale table), this is the
+    * identity and no shuffle is ever added. Measured on q36 at sf0.1
+    * (OPTIMIZATION_r07.md, same JVM, best-of-5): 1.28 s single-partition
+    * kernel vs 0.43 s spread (r6 explode+agg: 0.84 s). */
+  private[engine] def spreadSmall(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
@@ -71,8 +75,10 @@ object Ann {
     * parallelism to the key cardinality. Strategy choice cannot change
     * results (AnnSpec pins the forced over-bound branch pair-identical). */
   private[engine] def fetchSide(df: DataFrame): DataFrame = {
-    val bound = BigInt(df.sparkSession.conf.get("spark.graft.fetchBroadcastBytes",
-      (128L << 20).toString).toLong)
+    val key = "spark.graft.fetchBroadcastBytes"
+    val raw = df.sparkSession.conf.get(key, (128L << 20).toString)
+    val bound = BigInt(raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$key must be a whole number of bytes, got '$raw'")))
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes <= bound) broadcast(df)
     else df.hint("shuffle_hash")
   }
@@ -315,7 +321,7 @@ object Ann {
     // triples the probe fan-out, so it pays only once candidate volume
     // (corpus-quadratic) dominates probe rows (corpus-linear) — measured
     // 1.45x at sf1 (7.18 -> 4.94 s full operator) and ~0.5 s SLOWER at
-    // sf0.1 (BenchExtra q57full). Callers at corpus scale pass
+    // sf0.1 (OPTIMIZATION_r07.md, q57). Callers at corpus scale pass
     // numPivots = 4; callers
     // who narrow the bands implicitly trade pivots for band resolution.
     val maxCombos = 81

@@ -66,27 +66,11 @@ object SpatialJoin {
       .filter(call_function(fn, col("lon"), col("lat"), col("poly_id")))
   }
 
-  /** Unsalted shuffle variant — what a cover too large to broadcast forces
-    * WITHOUT skew handling: both sides exchange on `cell`, so a hot cell
-    * (urban cluster) lands every one of its rows on a single reducer. Kept
-    * as the honest baseline for the skew A/B (SkewBench; BENCH.md skew
-    * section) and for AQE's skew-join mitigation (`joinHint` = "merge"
-    * lets AdaptiveSparkPlan split the skewed partition; "shuffle_hash"
-    * pins the non-adaptive worst case). Same broadcast semi prefilter as
-    * the salted variant so the two differ ONLY in skew handling. */
-  def pipJoinShuffled(
-      pages: DataFrame, polys: Seq[Poly], res: Int, joinHint: String = "shuffle_hash"): DataFrame = {
-    val spark = pages.sparkSession
-    val fn = registerPipLookup(pages, polys)
-    val cover = coverDf(spark, polys, res)
-    pages
-      .join(broadcast(cover.select("cell").distinct()), Seq("cell"), "leftsemi")
-      .join(cover.hint(joinHint), Seq("cell"))
-      .filter(call_function(fn, col("lon"), col("lat"), col("poly_id")))
-  }
-
   /** Salted shuffle variant for covers too large to broadcast / dense
-    * cells: deterministic salt = pmod(xxhash64(url), salts).
+    * cells: deterministic salt = pmod(xxhash64(url), salts). Without the
+    * salt, both sides exchange on `cell` and a hot cell (urban cluster)
+    * lands every one of its rows on a single reducer; BENCH.md's skew
+    * section measured that unsalted baseline against salts 2/8/32.
     *
     * A broadcast semi-join on the cover's cell set prunes pages BEFORE the
     * wide exchange: only rows whose cell is covered by some polygon enter

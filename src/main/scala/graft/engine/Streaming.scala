@@ -36,7 +36,7 @@ object Streaming {
     * gate inputs are single-batch with a few thousand keys, so 32
     * partitions buy no parallelism and pay 32 commits. q44 measured
     * 6.4 -> 2.4 s when its cap landed at 8 (r3); the r7 same-JVM sweep
-    * (BenchExtra q44, best-of-4 warm at sf0.1) measured cap8 2.44 /
+    * (q44, best-of-4 warm at sf0.1, OPTIMIZATION_r07.md) measured cap8 2.44 /
     * cap4 1.91 / cap2 1.84 / cap1 1.88 s — the commit term keeps
     * shrinking to 4, then flattens — so the default cap is now 4. At
     * deploy scale the right cap is sized to state volume, not defaulted

@@ -28,14 +28,6 @@ object TextSketch {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, exprs => MinHashSig(exprs.head, params, mod, preMod), "built-in")
 
-  /** Register a DistinctGramHashes under `name`. */
-  def registerDistinctGrams(
-      spark: org.apache.spark.sql.SparkSession,
-      name: String,
-      n: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => DistinctGramHashes(exprs.head, n), "built-in")
-
   /** Register a SimHashPack under `name`: the `bits`-bit simhash long. */
   def registerSimHash(
       spark: org.apache.spark.sql.SparkSession,
@@ -43,50 +35,6 @@ object TextSketch {
       bits: Int): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       name, exprs => SimHashPack(exprs.head, bits), "built-in")
-}
-
-/** DISTINCT xxhash64 values of every n-char gram of a string, in one
-  * codegen'd pass: bit-identical to
-  * `array_distinct(transform(sequence(1, length(text)-(n-1)),
-  *                           i -> xxhash64(substring(text, i, n))))`
-  * — same code-point substring semantics (UTF8String.substringSQL, what
-  * the Substring expression calls) and the same seed-42 XXH64 — but
-  * WITHOUT the higher-order-function path, which is CodegenFallback and
-  * interprets the lambda per element (§4: expression choice). Built for
-  * q39's classify branch: per-doc distinct gram hashes with no Generate,
-  * no aggregate, no corpus-wide distinct exchange. */
-case class DistinctGramHashes(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1 && n <= 16)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  /** Public so generated Java can call it. */
-  def hashDistinct(v: org.apache.spark.unsafe.types.UTF8String): ArrayData = {
-    val len = v.numChars()
-    if (len < n) return new GenericArrayData(Array.empty[Long])
-    val seen = new java.util.LinkedHashSet[java.lang.Long]()
-    var i = 1
-    while (i <= len - n + 1) {
-      val g = v.substringSQL(i, n)
-      seen.add(org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(g, 42L))
-      i += 1
-    }
-    val out = new Array[Long](seen.size)
-    val it = seen.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    new GenericArrayData(out)
-  }
-
-  override def nullSafeEval(v: Any): Any =
-    hashDistinct(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("distinctGramHashes", this, classOf[DistinctGramHashes].getName)
-    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $ref.hashDistinct($s);")
-  }
-
-  override protected def withNewChildInternal(c: Expression): DistinctGramHashes = copy(child = c)
-  override def prettyName: String = s"distinct_gram_hashes_$n"
 }
 
 /** All `params.length` minhash minima of a hash array in one pass.

@@ -175,6 +175,15 @@ class AnnSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.fetchBroadcastBytes")
   }
 
+  test("a malformed spark.graft.fetchBroadcastBytes is refused by name") {
+    spark.conf.set("spark.graft.fetchBroadcastBytes", "12MB-ish")
+    try {
+      val e = intercept[IllegalArgumentException](Ann.fetchSide(vectors))
+      assert(e.getMessage.contains("spark.graft.fetchBroadcastBytes"), e.getMessage)
+      assert(e.getMessage.contains("12MB-ish"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.fetchBroadcastBytes")
+  }
+
   test("precomputed pivots reproduce the per-call pivot selection exactly") {
     import spark.implicits._
     Ann.register(spark)

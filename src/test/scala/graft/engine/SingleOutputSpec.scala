@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import graft.core.{BBox, JobConfig}
 import graft.sinks.OsmStats
+import graft.synth.SynthDem
 import java.nio.file.{Files, Paths}
 
 /** Single-output mode: multiple input files merge into ONE file with all
@@ -47,5 +48,34 @@ class SingleOutputSpec extends AnyFunSuite {
     val ids = "<node id=\"(\\d+)\"".r.findAllMatchIn(content).map(_.group(1).toLong).toSeq
     assert(ids.head == cfg.startNodeId)
     assert(ids == (ids.head until ids.head + ids.size))
+  }
+
+  test("two synthetic files, multiple tiles -> runSingle writes one merged output") {
+    val dir = Files.createTempDirectory("singleout-synth").toString
+    try {
+      val f1 = SynthDem.writeHgt(s"$dir/dem", 43, 6)
+      val f2 = SynthDem.writeHgt(s"$dir/dem", 43, 7)
+      // the area straddles the two files' shared edge at lon 7
+      val cfg = JobConfig(area = Some("6.85:43.1:7.15:43.3"),
+        maxNodesPerTile = 30000L, maxNodesPerWay = 2000, rdpEpsilon = None)
+      val cs = RasterPipeline.contours(RasterPipeline.tiles(spark, Seq(f1, f2), cfg), cfg).persist()
+      val (expectedNodes, expectedWays, sources, tiles) =
+        try (cs.groupBy().sum("nbNodes").collect()(0).getLong(0), cs.count(),
+          cs.select("key").distinct().count(), cs.select("key", "tileIdx").distinct().count())
+        finally cs.unpersist()
+      assert(sources == 2 && tiles > 2, "need tiles of both files for the merge to be meaningful")
+
+      val files = RasterPipeline.runSingle(spark, Seq(f1, f2), s"$dir/out", cfg)
+      assert(files.size == 1)
+      val stats = OsmStats.count(files.head)
+      assert(stats.nodes == expectedNodes)
+      assert(stats.ways == expectedWays)
+      val content = new String(Files.readAllBytes(Paths.get(files.head)), "UTF-8")
+      assert("<osm version=".r.findAllIn(content).size == 1)
+      assert(content.lastIndexOf("<node id=") < content.indexOf("<way id="))
+      val ids = "<node id=\"(\\d+)\"".r.findAllMatchIn(content).map(_.group(1).toLong).toSeq
+      assert(ids.head == cfg.startNodeId)
+      assert(ids == (ids.head until ids.head + ids.size))
+    } finally graft.core.Fs.deleteRecursive(dir)
   }
 }

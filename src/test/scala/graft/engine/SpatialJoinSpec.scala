@@ -75,16 +75,6 @@ class SpatialJoinSpec extends AnyFunSuite {
     assert(a == b)
   }
 
-  test("unsalted shuffled PIP join equals broadcast variant (both hints)") {
-    val a = SpatialJoin.pipJoin(pages, polys, Res)
-      .select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    for (hint <- Seq("shuffle_hash", "merge")) {
-      val b = SpatialJoin.pipJoinShuffled(pages, polys, Res, joinHint = hint)
-        .select("page_id", "poly_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(a == b, s"hint=$hint")
-    }
-  }
-
   test("ring-expansion kNN equals brute force") {
     val queries = Seq(
       (0L, 6.1, 43.2), (1L, 6.5, 43.5), (2L, 6.9, 43.8), (3L, 6.253, 43.253),

@@ -39,7 +39,7 @@ def one(seed, sf, keep):
     if r.returncode != 0:
         print(r.stdout, r.stderr)
         return tag, "GEN-FAIL", time.time() - t0, []
-    env = dict(os.environ, SPARK_GRAFT_CPUS="16")
+    env = dict(os.environ, SPARK_GRAFT_CPUS=str(os.cpu_count() or 1))
     r = run(["sbt", "-batch", f"runMain graft.Verify {data} {out}"],
             cwd=REPO, env=env, capture_output=True, text=True)
     if r.returncode != 0:
@@ -58,9 +58,13 @@ def one(seed, sf, keep):
     for info in (l for l in r.stdout.splitlines()
                  if l.strip() and not gate_re.match(l.strip())):
         print(f"  [gatecheck] {info}")
+    # fail closed: a run with no recognized gate line checked nothing
+    if r.returncode != 0 and not lines:
+        print(f"  [gatecheck] exit {r.returncode}, no gate lines; stderr:")
+        print(r.stderr[-4000:])
     bad = [l for l in lines if ": OK" not in l]
     ok = len(lines) - len(bad)
-    status = "OK" if not bad else "FAIL"
+    status = "OK" if lines and not bad else "FAIL"
     if not keep and status == "OK":
         shutil.rmtree(data, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
